@@ -18,7 +18,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nexgap_spark.operators.text import tokenize
-from nexgap_spark.session import MaterializeGen, fan_out_python_stage, materialize
+from nexgap_spark.session import (
+    MaterializeGen,
+    _plan_stats_bytes,
+    fan_out_python_stage,
+    materialize,
+)
 
 # Fixed affine hash parameters (a, b) for MinHash — odd multipliers, distinct
 # offsets; p is the smallest prime above 2^32 so (a*h+b) % p stays in int64.
@@ -198,15 +203,6 @@ def shingle_table(
     return out.distinct()
 
 
-def plan_size_bytes(df: DataFrame) -> int:
-    """Optimizer size estimate of ``df``'s plan — for a parquet scan this
-    is the on-disk file bytes (× ``fileCompressionFactor``), computed from
-    metadata with no job. Estimates for derived plans inherit the scan's
-    figure, so upstream-of-filter frames stay honest; RDD-backed lineages
-    (localCheckpoint) report the conservative default (huge)."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-
-
 def shared_shingles(
     df: DataFrame,
     *,
@@ -247,7 +243,7 @@ def shared_shingles(
         min_bytes = int(
             os.environ.get("NEXGAP_SHINGLE_MAT_MIN_BYTES", str(1024 * 1024))
         )
-    if plan_size_bytes(size_of if size_of is not None else df) < min_bytes:
+    if _plan_stats_bytes(size_of if size_of is not None else df) < min_bytes:
         return shingle_table(
             df, id_col=id_col, text_col=text_col, shingle_n=shingle_n
         )

@@ -43,16 +43,18 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from nexgap_spark.session import fan_out_python_stage
 from nexgap_spark.operators.similarity import (
     DEFAULT_DIM,
+    _approx_cos,
+    _centroid_groups,
     _collect_small_side,
+    _key,
+    _merge_topk,
     _np_assign,
-    _np_assign_topm,
-    _seq_score_block,
+    _probe_topk,
+    _route_queries,
     _seq_sqrt_norms,
     load_ivf_index,
 )
@@ -369,6 +371,18 @@ def _reconstruct(codes: np.ndarray, cb: np.ndarray) -> np.ndarray:
     return out
 
 
+def _pq_score(grp: pd.DataFrame, key, qm: np.ndarray, qn: np.ndarray, ctx) -> np.ndarray:
+    """ADC approximate cosine: the query against each candidate's
+    RECONSTRUCTION (plus its centroid when the codebook is residual),
+    normed by the reconstruction's own norms. ``ctx`` = (codebook, centroid
+    map or None)."""
+    cb, cent_map = ctx
+    recon = _reconstruct(_decode_codes(grp["pqcodes"], cb.shape[0]), cb)
+    if cent_map is not None:
+        recon = recon + cent_map[key][None, :]
+    return _approx_cos(qm, qn, recon, _seq_sqrt_norms(recon))
+
+
 def ivf_topk_indexed_pq(
     queries: DataFrame,
     index_path: str,
@@ -404,98 +418,24 @@ def ivf_topk_indexed_pq(
             "pq_codebooks=...)"
         )
     root = index_path.rstrip("/")
-    cb_df = spark.read.parquet(f"{root}/pq_codebooks")
-    cb, residual = _collect_codebook(cb_df)
-    m = cb.shape[0]
-    cent_pd = _collect_small_side(
-        centroids, [F.col("centroid_id"), F.col(vec_col)], "centroid side"
-    )
-    cent_ids = cent_pd["centroid_id"].to_numpy()
-    cent_mat = np.stack(cent_pd[vec_col].to_numpy()).astype(np.float64)
-    q_pd = _collect_small_side(queries, [F.col(id_col), F.col(vec_col)], "query side")
-    q_ids = q_pd[id_col].to_numpy()
-    q_mat = np.stack(q_pd[vec_col].to_numpy()).astype(np.float64)
-    q_probes = _np_assign_topm(q_mat, cent_ids, cent_mat, max(1, nprobe))
-    q_norms = _seq_sqrt_norms(q_mat)
-
-    members: dict = {}
-    for qi, probed in enumerate(q_probes):
-        for c in probed:
-            key = c.item() if hasattr(c, "item") else c
-            members.setdefault(key, []).append(qi)
-    q_by_cent = {
-        c: (q_ids[idx], q_mat[idx], q_norms[idx])
-        for c, idx in ((c, np.array(v)) for c, v in members.items())
-    }
-    probed_ids = sorted(q_by_cent)
-    sc = spark.sparkContext
-    bq = sc.broadcast(q_by_cent)
-    bcb = sc.broadcast(cb)
-    # residual indexes reconstruct candidate ≈ centroid + r̂ — the probe
+    cb, residual = _collect_codebook(spark.read.parquet(f"{root}/pq_codebooks"))
+    r = _route_queries(queries, centroids, id_col=id_col, vec_col=vec_col, nprobe=nprobe)
+    # residual indexes reconstruct candidate ≈ centroid + r̂ — the scorer
     # adds the (already-collected) centroid vector back per group
     cent_map = (
-        {
-            cid.item() if hasattr(cid, "item") else cid: cent_mat[i]
-            for i, cid in enumerate(cent_ids)
-        }
+        {_key(cid): r.cent_mat[i] for i, cid in enumerate(r.cent_ids)}
         if residual
         else None
     )
-    bcm = sc.broadcast(cent_map)
 
     # ---- PQ candidate scan: float/int8 columns NEVER read -----------------
-    pruned = corpus.filter(F.col("centroid_id").isin(probed_ids)).select(
-        id_col, "centroid_id", "pqcodes"
+    partials = _probe_topk(
+        r.prune(corpus).select(id_col, "centroid_id", "pqcodes"),
+        r,
+        id_col=id_col,
+        take=k,
+        groups=_centroid_groups,
+        score=_pq_score,
+        ctx=(cb, cent_map),
     )
-
-    def search_pq(batches):
-        q_by = bq.value
-        cbm = bcb.value
-        cmap = bcm.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows_q, rows_n, rows_c = [], [], []
-            for cent, grp in pdf.groupby("centroid_id"):
-                key = cent.item() if hasattr(cent, "item") else cent
-                qc = q_by.get(key)
-                if qc is None:
-                    continue
-                sub_q_ids, sub_qm, sub_qn = qc
-                recon = _reconstruct(_decode_codes(grp["pqcodes"], m), cbm)
-                if cmap is not None:
-                    recon = recon + cmap[key][None, :]
-                rl2 = _seq_sqrt_norms(recon)
-                sub_nids = grp[id_col].to_numpy()
-                dots = _seq_score_block(sub_qm, recon)
-                denom = sub_qn[:, None] * np.where(rl2 == 0.0, np.inf, rl2)[None, :]
-                cos = dots / denom
-                for qi in range(len(sub_q_ids)):
-                    row = cos[qi]
-                    mask = sub_nids == sub_q_ids[qi]
-                    if mask.any():
-                        row = row.copy()
-                        row[mask] = -np.inf
-                    order = np.lexsort((sub_nids, -row))[:k]
-                    keep = order[np.isfinite(row[order])]
-                    rows_q.extend([sub_q_ids[qi]] * len(keep))
-                    rows_n.extend(sub_nids[keep])
-                    rows_c.extend(row[keep])
-            yield pd.DataFrame({"q_id": rows_q, "n_id": rows_n, "acos": rows_c})
-
-    q_id_type = queries.schema[id_col].dataType.simpleString()
-    n_id_type = corpus.schema[id_col].dataType.simpleString()
-    partials = fan_out_python_stage(pruned).mapInPandas(
-        search_pq, schema=f"q_id {q_id_type}, n_id {n_id_type}, acos double"
-    )
-    wq = W.partitionBy("q_id").orderBy(F.col("acos").desc(), F.col("n_id"))
-    return (
-        partials.withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= k)
-        .select(
-            F.col("q_id"),
-            F.col("n_id"),
-            F.round("acos", 6).alias("cos"),
-            F.col("_rn").alias("rank"),
-        )
-    )
+    return _merge_topk(partials, k)

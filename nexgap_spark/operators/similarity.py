@@ -12,6 +12,8 @@ within-cluster only).
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -328,6 +330,191 @@ def _np_assign_topm(
     return out
 
 
+# ---------------------------------------------------------------------------
+# The IVF probe loop. Every probe (transient ivf_topk, the float/int8 indexed
+# probes, pq.ivf_topk_indexed_pq) runs the same skeleton: route the queries
+# to centroids, score each probed centroid group with a pluggable scorer,
+# keep a per-partition partial top-k, merge the partials by window.
+# ---------------------------------------------------------------------------
+
+
+def _key(v):
+    """Plain-Python centroid key: numpy scalars via .item(), strings as is
+    (centroid ids keep the caller's id type — string ids are legal)."""
+    return v.item() if hasattr(v, "item") else v
+
+
+class _Routing(NamedTuple):
+    cent_ids: np.ndarray
+    cent_mat: np.ndarray
+    q_ids: np.ndarray
+    q_mat: np.ndarray
+    q_norms: np.ndarray
+    q_id_type: str
+    # centroid key -> (query ids, query matrix, query norms) of the queries
+    # that probe it
+    q_by_cent: dict
+
+    def prune(self, corpus: DataFrame) -> DataFrame:
+        """Partition pruning: the scan skips every unprobed cluster's files."""
+        return corpus.filter(F.col("centroid_id").isin(sorted(self.q_by_cent)))
+
+
+def _route_queries(
+    queries: DataFrame, centroids: DataFrame, *, id_col: str, vec_col: str, nprobe: int
+) -> _Routing:
+    """Collect the centroid and query sides and route each query to its
+    ``nprobe`` nearest centroids. With nprobe > 1 a query lands in several
+    per-centroid blocks and the final top-k window merges its partials (no
+    neighbor duplicates: each corpus row belongs to ONE cluster).
+    _np_assign_topm returns the probed centroids' IDs, not positions — they
+    are used verbatim; indexing cent_ids with them would silently probe the
+    wrong cluster whenever ids aren't 0..n-1 in collect order."""
+    cent_col = (
+        F.col("centroid_id")
+        if "centroid_id" in centroids.columns
+        else F.col(id_col).alias("centroid_id")
+    )
+    cent_pd = _collect_small_side(centroids, [cent_col, F.col(vec_col)], "centroid side")
+    cent_ids = cent_pd["centroid_id"].to_numpy()
+    cent_mat = np.stack(cent_pd[vec_col].to_numpy()).astype(np.float64)
+    q_pd = _collect_small_side(queries, [F.col(id_col), F.col(vec_col)], "query side")
+    q_ids = q_pd[id_col].to_numpy()
+    q_mat = np.stack(q_pd[vec_col].to_numpy()).astype(np.float64)
+    q_norms = _seq_sqrt_norms(q_mat)
+    members: dict = {}
+    for qi, probed in enumerate(_np_assign_topm(q_mat, cent_ids, cent_mat, max(1, nprobe))):
+        for c in probed:
+            members.setdefault(_key(c), []).append(qi)
+    q_by_cent = {
+        c: (q_ids[idx], q_mat[idx], q_norms[idx])
+        for c, idx in ((c, np.array(v)) for c, v in members.items())
+    }
+    q_id_type = queries.schema[id_col].dataType.simpleString()
+    return _Routing(cent_ids, cent_mat, q_ids, q_mat, q_norms, q_id_type, q_by_cent)
+
+
+def _probe_topk(
+    scan: DataFrame,
+    routing: _Routing,
+    *,
+    id_col: str,
+    take: int,
+    groups,
+    score,
+    ctx=None,
+) -> DataFrame:
+    """Per-partition partial top-``take`` (q_id, n_id, cos) over ``scan``,
+    one vectorized Arrow stage. ``groups(pdf, ctx)`` splits a batch into
+    (centroid key, rows) groups; ``score(grp, key, qm, qn, ctx)`` turns one
+    group into the cosine block of the queries probing that centroid.
+    ``ctx`` ships in the same broadcast as the query blocks. Total score
+    work = Σ_cluster |Q_probing_c|·|C_c| — the IVF saving is real.
+
+    Self-matches are excluded before the cut (same contract as
+    brute_force_topk); non-finite scores (a zero norm gives 0/0 = NaN) are
+    dropped after it. The id field types come from the actual schemas:
+    hard-coding long would coerce/fail the string or int ids that id_col=
+    legitimately allows."""
+    bq = scan.sparkSession.sparkContext.broadcast((routing.q_by_cent, ctx))
+
+    def search(batches):
+        q_by, ctx_v = bq.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            rows_q, rows_n, rows_c = [], [], []
+            for key, grp in groups(pdf, ctx_v):
+                qc = q_by.get(key)
+                if qc is None:
+                    continue
+                sub_q_ids, sub_qm, sub_qn = qc
+                cos = score(grp, key, sub_qm, sub_qn, ctx_v)
+                sub_nids = grp[id_col].to_numpy()
+                for qi in range(len(sub_q_ids)):
+                    row = cos[qi]
+                    mask = sub_nids == sub_q_ids[qi]
+                    if mask.any():
+                        row = row.copy()
+                        row[mask] = -np.inf
+                    order = np.lexsort((sub_nids, -row))[:take]
+                    keep = order[np.isfinite(row[order])]
+                    rows_q.extend([sub_q_ids[qi]] * len(keep))
+                    rows_n.extend(sub_nids[keep])
+                    rows_c.extend(row[keep])
+            yield pd.DataFrame({"q_id": rows_q, "n_id": rows_n, "cos": rows_c})
+
+    n_id_type = scan.schema[id_col].dataType.simpleString()
+    return fan_out_python_stage(scan).mapInPandas(
+        search, schema=f"q_id {routing.q_id_type}, n_id {n_id_type}, cos double"
+    )
+
+
+def _merge_topk(
+    partials: DataFrame, k: int, *, rank_col: str = "rank", digits: int | None = 6
+) -> DataFrame:
+    """Global top-k per query from the partials: row_number over
+    (cos DESC, n_id), cos rounded to ``digits`` (None keeps it exact)."""
+    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
+    cos = F.col("cos") if digits is None else F.round("cos", digits).alias("cos")
+    return (
+        partials.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= k)
+        .select(F.col("q_id"), F.col("n_id"), cos, F.col("_rn").alias(rank_col))
+    )
+
+
+def _centroid_groups(pdf: pd.DataFrame, ctx):
+    """Indexed probes: the stored centroid_id column groups the batch."""
+    for cent, grp in pdf.groupby("centroid_id"):
+        yield _key(cent), grp
+
+
+def _assigned_groups(vec_col: str):
+    """Transient probe: assign the batch's rows to their nearest centroid
+    (``ctx`` = (centroid ids, centroid matrix)) and group on that."""
+
+    def groups(pdf: pd.DataFrame, ctx):
+        cm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        assigned = _np_assign(cm, *ctx)
+        for cent in np.unique(assigned):
+            yield _key(cent), pdf[assigned == cent]
+
+    return groups
+
+
+def _float_scorer(vec_col: str):
+    """Exact cosine from the stored float vectors (ordered-fold dots)."""
+
+    def score(grp: pd.DataFrame, key, qm: np.ndarray, qn: np.ndarray, ctx) -> np.ndarray:
+        cm = np.stack(grp[vec_col].to_numpy()).astype(np.float64)
+        return _seq_score_block(qm, cm) / (qn[:, None] * _seq_sqrt_norms(cm)[None, :])
+
+    return score
+
+
+def _approx_cos(
+    qm: np.ndarray, qn: np.ndarray, cm: np.ndarray, cn: np.ndarray, scale=None
+) -> np.ndarray:
+    """Cosine block against quantized candidates: ordered-fold dots of
+    ``qm`` with ``cm`` (times ``scale`` per candidate, when given) over
+    |Q|·``cn``. A zero ``cn`` reads as ∞, so a zero-norm candidate scores 0,
+    not NaN. The ordered fold (not BLAS matmul) breaks candidate ties
+    identically across engines, which the q120/q122 SQL oracles depend on,
+    and keeps scores bit-comparable with DuckDB's left-to-right list fold."""
+    dots = _seq_score_block(qm, cm)
+    if scale is not None:
+        dots = dots * scale[None, :]
+    return dots / (qn[:, None] * np.where(cn == 0.0, np.inf, cn)[None, :])
+
+
+def _int8_score(grp: pd.DataFrame, key, qm: np.ndarray, qn: np.ndarray, ctx) -> np.ndarray:
+    """int8 approximate cosine: x ≈ qscale·q, so cos(Q, x) ≈ (Q·q)·qscale /
+    (|Q|·l2n) with l2n the stored FLOAT norm."""
+    q8 = np.stack(grp["qvec"].to_numpy()).astype(np.float64)
+    return _approx_cos(qm, qn, q8, grp["l2n"].to_numpy(), grp["qscale"].to_numpy())
+
+
 def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -336,7 +523,6 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 3,
-    dim: int = DEFAULT_DIM,
     nprobe: int = 1,
 ) -> DataFrame:
     """Approximate top-k: route queries and corpus to centroids, then search
@@ -367,121 +553,17 @@ def ivf_topk(
     kernel there. Per-call corpus assignment makes the TRANSIENT form
     uneconomical at K ≈ √N — use build_ivf_index + ivf_topk_indexed, which
     pay assignment once at build."""
-    cent_pd = _collect_small_side(
-        centroids,
-        [
-            F.col("centroid_id") if "centroid_id" in centroids.columns else F.col(id_col).alias("centroid_id"),
-            F.col(vec_col),
-        ],
-        "centroid side",
+    r = _route_queries(queries, centroids, id_col=id_col, vec_col=vec_col, nprobe=nprobe)
+    partials = _probe_topk(
+        corpus,
+        r,
+        id_col=id_col,
+        take=k,
+        groups=_assigned_groups(vec_col),
+        score=_float_scorer(vec_col),
+        ctx=(r.cent_ids, r.cent_mat),
     )
-    cent_ids = cent_pd["centroid_id"].to_numpy()
-    cent_mat = np.stack(cent_pd[vec_col].to_numpy()).astype(np.float64)
-
-    q_pd = _collect_small_side(queries, [F.col(id_col), F.col(vec_col)], "query side")
-    q_ids = q_pd[id_col].to_numpy()
-    q_mat = np.stack(q_pd[vec_col].to_numpy()).astype(np.float64)
-    q_probes = _np_assign_topm(q_mat, cent_ids, cent_mat, max(1, nprobe))
-    q_norms = _seq_sqrt_norms(q_mat)
-    # per-centroid query blocks; with nprobe > 1 a query appears in several
-    # blocks, and the final top-k window merges its per-cluster partials
-    # (no neighbor duplicates: each corpus row belongs to ONE cluster)
-    members: dict[int, list[int]] = {}
-    for qi, probed in enumerate(q_probes):
-        for c in probed:
-            # .item() (not int()): centroid ids inherit the caller's id
-            # type — string ids are legal, same as ivf_topk_indexed
-            members.setdefault(c.item() if hasattr(c, "item") else c, []).append(qi)
-    q_by_cent = {
-        c: (q_ids[idx], q_mat[idx], q_norms[idx])
-        for c, idx in ((c, np.array(v)) for c, v in members.items())
-    }
-
-    sc = corpus.sparkSession.sparkContext
-    bq = sc.broadcast((q_by_cent, cent_ids, cent_mat))
-
-    def search(batches):
-        q_by, c_ids_b, c_mat_b = bq.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            n_ids = pdf[id_col].to_numpy()
-            assigned = _np_assign(cm, c_ids_b, c_mat_b)
-            c_norms = _seq_sqrt_norms(cm)
-            rows_q, rows_n, rows_c = [], [], []
-            for cent in np.unique(assigned):
-                qc = q_by.get(cent.item() if hasattr(cent, "item") else cent)
-                if qc is None:
-                    continue
-                sub_q_ids, sub_qm, sub_qn = qc
-                sel = assigned == cent
-                sub_cm, sub_nids, sub_cn = cm[sel], n_ids[sel], c_norms[sel]
-                cos = _seq_score_block(sub_qm, sub_cm) / (
-                    sub_qn[:, None] * sub_cn[None, :]
-                )
-                for qi in range(len(sub_q_ids)):
-                    row = cos[qi]
-                    mask = sub_nids == sub_q_ids[qi]
-                    if mask.any():
-                        row = row.copy()
-                        row[mask] = -np.inf
-                    order = np.lexsort((sub_nids, -row))[:k]
-                    keep = order[np.isfinite(row[order])]
-                    rows_q.extend([sub_q_ids[qi]] * len(keep))
-                    rows_n.extend(sub_nids[keep])
-                    rows_c.extend(row[keep])
-            yield pd.DataFrame({"q_id": rows_q, "n_id": rows_n, "cos": rows_c})
-
-    # derive id field types from the actual schemas (see brute_force_topk)
-    q_id_type = queries.schema[id_col].dataType.simpleString()
-    n_id_type = corpus.schema[id_col].dataType.simpleString()
-    partials = fan_out_python_stage(corpus).mapInPandas(
-        search, schema=f"q_id {q_id_type}, n_id {n_id_type}, cos double"
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (
-        partials.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cos", "rk")
-    )
-
-
-def blocked_near_dup(
-    vectors: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str = "label",
-    threshold: float = 0.8,
-    dim: int = DEFAULT_DIM,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs within blocks (e.g. a coarse
-    cluster or label). Blocking bounds the quadratic term to the largest
-    block; pair (a < b) output with cosine ≥ threshold."""
-    vectors = fan_out_python_stage(vectors)
-    a = vectors.select(
-        F.col(id_col).alias("a"),
-        F.col(vec_col).alias("a_vec"),
-        norm(F.col(vec_col), dim).alias("a_norm"),
-        F.col(block_col).alias("blk"),
-    )
-    b = vectors.select(
-        F.col(id_col).alias("b"),
-        F.col(vec_col).alias("b_vec"),
-        norm(F.col(vec_col), dim).alias("b_norm"),
-        F.col(block_col).alias("blk"),
-    )
-    return (
-        a.join(b, "blk")
-        .filter(F.col("a") < F.col("b"))
-        .withColumn(
-            "cos",
-            dot(F.col("a_vec"), F.col("b_vec"), dim) / (F.col("a_norm") * F.col("b_norm")),
-        )
-        .filter(F.col("cos") >= threshold)
-        .select("a", "b", "cos", "blk")
-    )
+    return _merge_topk(partials, k, rank_col="rk", digits=None)
 
 
 def blocked_near_dup_arrow(
@@ -493,7 +575,9 @@ def blocked_near_dup_arrow(
     threshold: float = 0.8,
     anchor_chunk: int = 2048,
 ) -> DataFrame:
-    """Arrow/BLAS twin of :func:`blocked_near_dup`: same pair set, same
+    """Arrow/BLAS twin of the relational blocked near-dup plan (a self-join
+    on the block column; kept as ``blocked_near_dup`` in
+    tests/test_dedup_ops.py as this kernel's reference): same pair set, same
     bit-identical cosines, ~25× the throughput at sf1.0 (q36 100.7 s →
     ~4 s — the per-pair flat expression chain costs ~36 µs/pair where the
     per-block Gram accumulation costs ~1 µs/pair).
@@ -1132,7 +1216,6 @@ def ivf_topk_indexed(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 3,
-    dim: int = DEFAULT_DIM,
     nprobe: int = 1,
 ) -> DataFrame:
     """Approximate top-k against a PERSISTED index: route each query to its
@@ -1149,92 +1232,17 @@ def ivf_topk_indexed(
 
     Same semantics as ivf_topk at equal (centroids, nprobe); at
     nprobe = n_centroids it degenerates to exact brute force."""
-    spark = queries.sparkSession
-    corpus, centroids = load_ivf_index(spark, index_path)
-    cent_pd = _collect_small_side(
-        centroids, [F.col("centroid_id"), F.col(vec_col)], "centroid side"
+    corpus, centroids = load_ivf_index(queries.sparkSession, index_path)
+    r = _route_queries(queries, centroids, id_col=id_col, vec_col=vec_col, nprobe=nprobe)
+    partials = _probe_topk(
+        r.prune(corpus),
+        r,
+        id_col=id_col,
+        take=k,
+        groups=_centroid_groups,
+        score=_float_scorer(vec_col),
     )
-    cent_ids = cent_pd["centroid_id"].to_numpy()
-    cent_mat = np.stack(cent_pd[vec_col].to_numpy()).astype(np.float64)
-    q_pd = _collect_small_side(queries, [F.col(id_col), F.col(vec_col)], "query side")
-    q_ids = q_pd[id_col].to_numpy()
-    q_mat = np.stack(q_pd[vec_col].to_numpy()).astype(np.float64)
-    q_probes = _np_assign_topm(q_mat, cent_ids, cent_mat, max(1, nprobe))
-    q_norms = _seq_sqrt_norms(q_mat)
-
-    # _np_assign_topm returns the probed centroids' IDs (not positions) —
-    # use them verbatim; indexing cent_ids with them would silently probe
-    # the wrong cluster whenever ids aren't 0..n-1 in collect order.
-    members: dict = {}
-    for qi, probed in enumerate(q_probes):
-        for c in probed:
-            key = c.item() if hasattr(c, "item") else c
-            members.setdefault(key, []).append(qi)
-    q_by_cent = {
-        c: (q_ids[idx], q_mat[idx], q_norms[idx])
-        for c, idx in ((c, np.array(v)) for c, v in members.items())
-    }
-    probed_ids = sorted(q_by_cent)
-    # partition pruning: the scan skips every unprobed cluster's files
-    pruned = corpus.filter(F.col("centroid_id").isin(probed_ids))
-
-    sc = spark.sparkContext
-    bq = sc.broadcast(q_by_cent)
-
-    def search(batches):
-        q_by = bq.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows_q, rows_n, rows_c = [], [], []
-            for cent, grp in pdf.groupby("centroid_id"):
-                key = cent.item() if hasattr(cent, "item") else cent
-                qc = q_by.get(key)
-                if qc is None:
-                    continue
-                sub_q_ids, sub_qm, sub_qn = qc
-                sub_cm = np.stack(grp[vec_col].to_numpy()).astype(np.float64)
-                sub_nids = grp[id_col].to_numpy()
-                sub_cn = _seq_sqrt_norms(sub_cm)
-                cos = _seq_score_block(sub_qm, sub_cm) / (
-                    sub_qn[:, None] * sub_cn[None, :]
-                )
-                for qi in range(len(sub_q_ids)):
-                    row = cos[qi]
-                    # self-matches excluded, same contract as
-                    # brute_force_topk/ivf_topk
-                    mask = sub_nids == sub_q_ids[qi]
-                    if mask.any():
-                        row = row.copy()
-                        row[mask] = -np.inf
-                    order = np.lexsort((sub_nids, -row))[:k]
-                    # zero-norm vectors give cos = 0/0 = NaN — drop
-                    # non-finite scores, same contract as ivf_topk
-                    keep = order[np.isfinite(row[order])]
-                    rows_q.extend([sub_q_ids[qi]] * len(keep))
-                    rows_n.extend(sub_nids[keep])
-                    rows_c.extend(row[keep])
-            yield pd.DataFrame({"q_id": rows_q, "n_id": rows_n, "cos": rows_c})
-
-    # derive the id field types from the actual schemas — the corpus id's
-    # native type must survive (hard-coding long would coerce/fail string
-    # or int ids that id_col= legitimately allows)
-    q_id_type = queries.schema[id_col].dataType.simpleString()
-    n_id_type = corpus.schema[id_col].dataType.simpleString()
-    partials = fan_out_python_stage(pruned).mapInPandas(
-        search, schema=f"q_id {q_id_type}, n_id {n_id_type}, cos double"
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (
-        partials.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(
-            F.col("q_id"),
-            F.col("n_id"),
-            F.round("cos", 6).alias("cos"),
-            F.col("_rn").alias("rank"),
-        )
-    )
+    return _merge_topk(partials, k)
 
 
 def ivf_topk_indexed_int8(
@@ -1244,7 +1252,6 @@ def ivf_topk_indexed_int8(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 3,
-    dim: int = DEFAULT_DIM,
     nprobe: int = 1,
     rerank_factor: int = 4,
 ) -> DataFrame:
@@ -1290,107 +1297,31 @@ def ivf_topk_indexed_int8(
             "index has no int8 columns; build with build_ivf_index(..., "
             "quantize=True)"
         )
-    cent_pd = _collect_small_side(
-        centroids, [F.col("centroid_id"), F.col(vec_col)], "centroid side"
-    )
-    cent_ids = cent_pd["centroid_id"].to_numpy()
-    cent_mat = np.stack(cent_pd[vec_col].to_numpy()).astype(np.float64)
-    q_pd = _collect_small_side(queries, [F.col(id_col), F.col(vec_col)], "query side")
-    q_ids = q_pd[id_col].to_numpy()
-    q_mat = np.stack(q_pd[vec_col].to_numpy()).astype(np.float64)
-    q_probes = _np_assign_topm(q_mat, cent_ids, cent_mat, max(1, nprobe))
-    q_norms = _seq_sqrt_norms(q_mat)
-
-    members: dict = {}
-    for qi, probed in enumerate(q_probes):
-        for c in probed:
-            key = c.item() if hasattr(c, "item") else c
-            members.setdefault(key, []).append(qi)
-    q_by_cent = {
-        c: (q_ids[idx], q_mat[idx], q_norms[idx])
-        for c, idx in ((c, np.array(v)) for c, v in members.items())
-    }
-    probed_ids = sorted(q_by_cent)
-    sc = spark.sparkContext
-    bq = sc.broadcast(q_by_cent)
+    r = _route_queries(queries, centroids, id_col=id_col, vec_col=vec_col, nprobe=nprobe)
     c_take = max(k, rerank_factor * k)
 
     # ---- int8 candidate scan: float column NEVER read here ----------------
-    pruned_q = corpus.filter(F.col("centroid_id").isin(probed_ids)).select(
-        id_col, "centroid_id", "qvec", "qscale", "l2n"
+    partials = _probe_topk(
+        r.prune(corpus).select(id_col, "centroid_id", "qvec", "qscale", "l2n"),
+        r,
+        id_col=id_col,
+        take=c_take,
+        groups=_centroid_groups,
+        score=_int8_score,
     )
-
-    def search_int8(batches):
-        q_by = bq.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows_q, rows_n, rows_c = [], [], []
-            for cent, grp in pdf.groupby("centroid_id"):
-                key = cent.item() if hasattr(cent, "item") else cent
-                qc = q_by.get(key)
-                if qc is None:
-                    continue
-                sub_q_ids, sub_qm, sub_qn = qc
-                qm8 = np.stack(grp["qvec"].to_numpy()).astype(np.float64)
-                scale = grp["qscale"].to_numpy()
-                l2n = grp["l2n"].to_numpy()
-                sub_nids = grp[id_col].to_numpy()
-                # approximate dot via the shared ORDERED-fold kernel (not
-                # BLAS matmul): candidate selection ties then break
-                # identically across engines, which the q120 SQL oracle
-                # depends on — and acos values are bit-comparable with
-                # DuckDB's left-to-right list fold
-                dots = _seq_score_block(sub_qm, qm8) * scale[None, :]
-                denom = sub_qn[:, None] * np.where(l2n == 0.0, np.inf, l2n)[None, :]
-                cos = dots / denom
-                for qi in range(len(sub_q_ids)):
-                    row = cos[qi]
-                    mask = sub_nids == sub_q_ids[qi]
-                    if mask.any():
-                        row = row.copy()
-                        row[mask] = -np.inf
-                    order = np.lexsort((sub_nids, -row))[:c_take]
-                    keep = order[np.isfinite(row[order])]
-                    rows_q.extend([sub_q_ids[qi]] * len(keep))
-                    rows_n.extend(sub_nids[keep])
-                    rows_c.extend(row[keep])
-            yield pd.DataFrame({"q_id": rows_q, "n_id": rows_n, "acos": rows_c})
-
-    q_id_type = queries.schema[id_col].dataType.simpleString()
-    n_id_type = corpus.schema[id_col].dataType.simpleString()
-    partials = fan_out_python_stage(pruned_q).mapInPandas(
-        search_int8, schema=f"q_id {q_id_type}, n_id {n_id_type}, acos double"
-    )
-    wq = W.partitionBy("q_id").orderBy(F.col("acos").desc(), F.col("n_id"))
     if rerank_factor == 0:
         # int8-only ranking: the float column is NEVER read — the measured
         # 4x-bytes serving shape (docstring rule). cos is the int8
         # APPROXIMATE cosine; ids carry the same recall as the float probe
         # on every measured regime.
-        return (
-            partials.withColumn("_rn", F.row_number().over(wq))
-            .filter(F.col("_rn") <= k)
-            .select(
-                F.col("q_id"),
-                F.col("n_id"),
-                F.round("acos", 6).alias("cos"),
-                F.col("_rn").alias("rank"),
-            )
-        )
-    cand = (
-        partials.withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= c_take)
-        .select("q_id", "n_id")
-    )
+        return _merge_topk(partials, k)
+    cand = _merge_topk(partials, c_take).select("q_id", "n_id")
 
     # ---- float rerank: only the candidates' vectors are read --------------
-    pruned_f = corpus.filter(F.col("centroid_id").isin(probed_ids)).select(
-        F.col(id_col).alias("n_id"), vec_col
-    )
+    pruned_f = r.prune(corpus).select(F.col(id_col).alias("n_id"), vec_col)
     cand_vec = cand.join(pruned_f, "n_id")
-    q_lookup = {qid: (q_mat[i], q_norms[i]) for i, qid in enumerate(q_ids)}
-    bql = sc.broadcast(q_lookup)
+    q_lookup = {qid: (r.q_mat[i], r.q_norms[i]) for i, qid in enumerate(r.q_ids)}
+    bql = spark.sparkContext.broadcast(q_lookup)
 
     def rerank(batches):
         lookup = bql.value
@@ -1417,20 +1348,11 @@ def ivf_topk_indexed_int8(
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
+    n_id_type = corpus.schema[id_col].dataType.simpleString()
     rescored = cand_vec.mapInPandas(
-        rerank, schema=f"q_id {q_id_type}, n_id {n_id_type}, cos double"
+        rerank, schema=f"q_id {r.q_id_type}, n_id {n_id_type}, cos double"
     )
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (
-        rescored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(
-            F.col("q_id"),
-            F.col("n_id"),
-            F.round("cos", 6).alias("cos"),
-            F.col("_rn").alias("rank"),
-        )
-    )
+    return _merge_topk(rescored, k)
 
 
 def semantic_dedup(

@@ -329,14 +329,14 @@ def main() -> None:
         if not indexed_only:
             t0 = time.time()
             rows = sim.ivf_topk(
-                queries, emb, cents, k=k, dim=dim, nprobe=nprobe
+                queries, emb, cents, k=k, nprobe=nprobe
             ).collect()
             cell = {"recall": round(_recall(rows), 4), "sec": round(time.time() - t0, 2)}
         if index_path is not None:
             b0 = _input_bytes_total(spark)
             t0 = time.time()
             rows_i = sim.ivf_topk_indexed(
-                queries, index_path, k=k, dim=dim, nprobe=nprobe
+                queries, index_path, k=k, nprobe=nprobe
             ).collect()
             cell["indexed_sec"] = round(time.time() - t0, 2)
             cell["indexed_input_mb"] = round((_input_bytes_total(spark) - b0) / 1e6, 1)
@@ -346,7 +346,7 @@ def main() -> None:
                 b0 = _input_bytes_total(spark)
                 t0 = time.time()
                 rows_q = sim.ivf_topk_indexed_int8(
-                    queries, index_path, k=k, dim=dim, nprobe=nprobe,
+                    queries, index_path, k=k, nprobe=nprobe,
                     rerank_factor=int(os.environ.get("RECALL_RERANK", "4")),
                 ).collect()
                 cell["int8_sec"] = round(time.time() - t0, 2)
@@ -363,7 +363,7 @@ def main() -> None:
                 b0 = _input_bytes_total(spark)
                 t0 = time.time()
                 rows_nr = sim.ivf_topk_indexed_int8(
-                    queries, index_path, k=k, dim=dim, nprobe=nprobe,
+                    queries, index_path, k=k, nprobe=nprobe,
                     rerank_factor=0,
                 ).collect()
                 cell["int8nr_sec"] = round(time.time() - t0, 2)

@@ -624,3 +624,317 @@ def test_ivf_int8_probe_norerank_never_reads_float(spark, tmp_path):
         len(per_q[q] & rr_per_q[q]) for q in per_q
     ) / (5 * len(per_q))
     assert agree >= 0.9, f"int8-only ids vs reranked ids agreement {agree}"
+
+
+# ---------------------------------------------------------------------------
+# IVF probe characterization: every probe's full output rows pinned on a
+# small hand-built corpus (string ids, one all-zero vector, one exact
+# cosine tie), at nprobe ∈ {1, 2, n_centroids}.
+# ---------------------------------------------------------------------------
+
+_CHAR_DIM = 8
+_CHAR_K = 3
+_CHAR_NPROBES = (1, 2, 3)  # 3 = n_centroids
+
+
+def _char_corpus() -> list:
+    """12 non-negative integer vectors; v07 duplicates v03 (every query
+    scores them as an exact tie) and v10 is all zeros."""
+    import numpy as np
+
+    mat = np.random.default_rng(11).integers(0, 5, size=(12, _CHAR_DIM))
+    mat[7] = mat[3]
+    mat[10] = 0
+    return [(f"v{i:02d}", [float(x) for x in row]) for i, row in enumerate(mat)]
+
+
+def _char_setup(spark, root: str) -> dict:
+    """Corpus, centroids and queries, plus two persisted indexes: ``flat``
+    stores the float, int8 and raw-PQ tiers, ``resid`` a residual-PQ
+    tier."""
+    from nexgap_spark.operators.similarity import build_ivf_index
+
+    schema = "vec_id string, embedding array<float>"
+    rows = _char_corpus()
+    corpus = spark.createDataFrame(rows, schema)
+    by_id = dict(rows)
+    centroids = spark.createDataFrame(
+        [("c_a", by_id["v00"]), ("c_b", by_id["v04"]), ("c_c", by_id["v08"])],
+        "centroid_id string, embedding array<float>",
+    )
+    # v03 has an exact-tie twin (v07); q_neg scores below zero against every
+    # non-negative corpus row, so the zero vector's cosine (0 or NaN) is
+    # what decides whether it surfaces
+    queries = spark.createDataFrame(
+        [
+            ("v01", by_id["v01"]),
+            ("v03", by_id["v03"]),
+            ("q_neg", [-1.0, -2.0, -1.0, -3.0, -1.0, -1.0, -2.0, -1.0]),
+        ],
+        schema,
+    )
+    sub = _CHAR_DIM // 2
+    raw_cb = spark.createDataFrame(
+        [
+            (j, i, [float((3 * i + j + d) % 5) for d in range(sub)])
+            for j in range(2)
+            for i in range(4)
+        ],
+        "subspace int, code int, codeword array<double>",
+    )
+    resid_cb = spark.createDataFrame(
+        [
+            (j, i, [((i + d + j) % 3 - 1) * 0.5 for d in range(sub)], True)
+            for j in range(2)
+            for i in range(4)
+        ],
+        "subspace int, code int, codeword array<double>, residual boolean",
+    )
+    flat, resid = f"{root}/flat", f"{root}/resid"
+    build_ivf_index(corpus, centroids, flat, quantize=True, pq_codebooks=raw_cb)
+    build_ivf_index(corpus, centroids, resid, pq_codebooks=resid_cb)
+    return {"corpus": corpus, "centroids": centroids, "queries": queries,
+            "flat": flat, "resid": resid}
+
+
+def _char_run(env: dict, probe: str, nprobe: int):
+    from nexgap_spark.operators import pq
+    from nexgap_spark.operators import similarity as sim
+
+    q, k = env["queries"], _CHAR_K
+    if probe == "ivf_topk":
+        return sim.ivf_topk(q, env["corpus"], env["centroids"], k=k, nprobe=nprobe)
+    if probe == "indexed":
+        return sim.ivf_topk_indexed(q, env["flat"], k=k, nprobe=nprobe)
+    if probe.startswith("int8_rr"):
+        return sim.ivf_topk_indexed_int8(
+            q, env["flat"], k=k, nprobe=nprobe, rerank_factor=int(probe[7:])
+        )
+    if probe == "pq":
+        return pq.ivf_topk_indexed_pq(q, env["flat"], k=k, nprobe=nprobe)
+    if probe == "pq_resid":
+        return pq.ivf_topk_indexed_pq(q, env["resid"], k=k, nprobe=nprobe)
+    raise ValueError(probe)
+
+
+@pytest.fixture(scope="module")
+def ivf_char(spark, tmp_path_factory):
+    return _char_setup(spark, str(tmp_path_factory.mktemp("ivf_char")))
+
+
+# every probe's sorted output rows; ivf_topk's cos is unrounded, the
+# indexed probes round it to 6 dp
+_CHAR_GOLDEN = {
+    ('ivf_topk', 1): [
+        ('q_neg', 'v00', -0.7207499701564472, 1),
+        ('v01', 'v08', 0.8029550685469661, 1),
+        ('v03', 'v02', 0.935683182550938, 2),
+        ('v03', 'v06', 0.8979068291164664, 3),
+        ('v03', 'v07', 1.0, 1),
+    ],
+    ('ivf_topk', 2): [
+        ('q_neg', 'v00', -0.7207499701564472, 1),
+        ('q_neg', 'v01', -0.8291561975888498, 3),
+        ('q_neg', 'v08', -0.7263001870593785, 2),
+        ('v01', 'v00', 0.7171371656006361, 2),
+        ('v01', 'v08', 0.8029550685469661, 1),
+        ('v03', 'v02', 0.935683182550938, 2),
+        ('v03', 'v06', 0.8979068291164664, 3),
+        ('v03', 'v07', 1.0, 1),
+    ],
+    ('ivf_topk', 3): [
+        ('q_neg', 'v00', -0.7207499701564472, 3),
+        ('q_neg', 'v03', -0.6837634587578276, 1),
+        ('q_neg', 'v07', -0.6837634587578276, 2),
+        ('v01', 'v06', 0.734288161744156, 3),
+        ('v01', 'v08', 0.8029550685469661, 1),
+        ('v01', 'v11', 0.7695538413614075, 2),
+        ('v03', 'v02', 0.935683182550938, 2),
+        ('v03', 'v06', 0.8979068291164664, 3),
+        ('v03', 'v07', 1.0, 1),
+    ],
+    ('indexed', 1): [
+        ('q_neg', 'v00', -0.72075, 1),
+        ('v01', 'v08', 0.802955, 1),
+        ('v03', 'v02', 0.935683, 2),
+        ('v03', 'v06', 0.897907, 3),
+        ('v03', 'v07', 1.0, 1),
+    ],
+    ('indexed', 2): [
+        ('q_neg', 'v00', -0.72075, 1),
+        ('q_neg', 'v01', -0.829156, 3),
+        ('q_neg', 'v08', -0.7263, 2),
+        ('v01', 'v00', 0.717137, 2),
+        ('v01', 'v08', 0.802955, 1),
+        ('v03', 'v02', 0.935683, 2),
+        ('v03', 'v06', 0.897907, 3),
+        ('v03', 'v07', 1.0, 1),
+    ],
+    ('indexed', 3): [
+        ('q_neg', 'v00', -0.72075, 3),
+        ('q_neg', 'v03', -0.683763, 1),
+        ('q_neg', 'v07', -0.683763, 2),
+        ('v01', 'v06', 0.734288, 3),
+        ('v01', 'v08', 0.802955, 1),
+        ('v01', 'v11', 0.769554, 2),
+        ('v03', 'v02', 0.935683, 2),
+        ('v03', 'v06', 0.897907, 3),
+        ('v03', 'v07', 1.0, 1),
+    ],
+    ('int8_rr0', 1): [
+        ('q_neg', 'v00', -0.721885, 2),
+        ('q_neg', 'v10', 0.0, 1),
+        ('v01', 'v08', 0.803858, 1),
+        ('v03', 'v02', 0.936058, 2),
+        ('v03', 'v06', 0.898292, 3),
+        ('v03', 'v07', 1.0, 1),
+    ],
+    ('int8_rr0', 2): [
+        ('q_neg', 'v00', -0.721885, 2),
+        ('q_neg', 'v08', -0.727662, 3),
+        ('q_neg', 'v10', 0.0, 1),
+        ('v01', 'v00', 0.718549, 2),
+        ('v01', 'v08', 0.803858, 1),
+        ('v01', 'v10', 0.0, 3),
+        ('v03', 'v02', 0.936058, 2),
+        ('v03', 'v06', 0.898292, 3),
+        ('v03', 'v07', 1.0, 1),
+    ],
+    ('int8_rr0', 3): [
+        ('q_neg', 'v03', -0.684661, 2),
+        ('q_neg', 'v07', -0.684661, 3),
+        ('q_neg', 'v10', 0.0, 1),
+        ('v01', 'v06', 0.735989, 3),
+        ('v01', 'v08', 0.803858, 1),
+        ('v01', 'v11', 0.768485, 2),
+        ('v03', 'v02', 0.936058, 2),
+        ('v03', 'v06', 0.898292, 3),
+        ('v03', 'v07', 1.0, 1),
+    ],
+    ('int8_rr4', 1): [
+        ('q_neg', 'v00', -0.72075, 1),
+        ('v01', 'v08', 0.802955, 1),
+        ('v03', 'v02', 0.935683, 2),
+        ('v03', 'v06', 0.897907, 3),
+        ('v03', 'v07', 1.0, 1),
+    ],
+    ('int8_rr4', 2): [
+        ('q_neg', 'v00', -0.72075, 1),
+        ('q_neg', 'v01', -0.829156, 3),
+        ('q_neg', 'v08', -0.7263, 2),
+        ('v01', 'v00', 0.717137, 2),
+        ('v01', 'v08', 0.802955, 1),
+        ('v03', 'v02', 0.935683, 2),
+        ('v03', 'v06', 0.897907, 3),
+        ('v03', 'v07', 1.0, 1),
+    ],
+    ('int8_rr4', 3): [
+        ('q_neg', 'v00', -0.72075, 3),
+        ('q_neg', 'v03', -0.683763, 1),
+        ('q_neg', 'v07', -0.683763, 2),
+        ('v01', 'v06', 0.734288, 3),
+        ('v01', 'v08', 0.802955, 1),
+        ('v01', 'v11', 0.769554, 2),
+        ('v03', 'v02', 0.935683, 2),
+        ('v03', 'v06', 0.897907, 3),
+        ('v03', 'v07', 1.0, 1),
+    ],
+    ('pq', 1): [
+        ('q_neg', 'v00', -0.845333, 1),
+        ('q_neg', 'v10', -0.846114, 2),
+        ('v01', 'v08', 0.754829, 1),
+        ('v03', 'v02', 0.879465, 1),
+        ('v03', 'v05', 0.678571, 3),
+        ('v03', 'v07', 0.879465, 2),
+    ],
+    ('pq', 2): [
+        ('q_neg', 'v00', -0.845333, 2),
+        ('q_neg', 'v01', -0.756787, 1),
+        ('q_neg', 'v08', -0.845333, 3),
+        ('v01', 'v00', 0.754829, 1),
+        ('v01', 'v08', 0.754829, 2),
+        ('v01', 'v10', 0.668153, 3),
+        ('v03', 'v02', 0.879465, 1),
+        ('v03', 'v05', 0.678571, 3),
+        ('v03', 'v07', 0.879465, 2),
+    ],
+    ('pq', 3): [
+        ('q_neg', 'v01', -0.756787, 2),
+        ('q_neg', 'v05', -0.769234, 3),
+        ('q_neg', 'v06', -0.716498, 1),
+        ('v01', 'v02', 0.841625, 1),
+        ('v01', 'v03', 0.841625, 2),
+        ('v01', 'v07', 0.841625, 3),
+        ('v03', 'v01', 0.835745, 3),
+        ('v03', 'v02', 0.879465, 1),
+        ('v03', 'v07', 0.879465, 2),
+    ],
+    ('pq_resid', 1): [
+        ('q_neg', 'v00', -0.74227, 1),
+        ('q_neg', 'v10', -0.788394, 2),
+        ('v01', 'v08', 0.766032, 1),
+        ('v03', 'v02', 0.787143, 2),
+        ('v03', 'v06', 0.787143, 3),
+        ('v03', 'v07', 0.8004, 1),
+    ],
+    ('pq_resid', 2): [
+        ('q_neg', 'v00', -0.74227, 1),
+        ('q_neg', 'v08', -0.746203, 2),
+        ('q_neg', 'v10', -0.788394, 3),
+        ('v01', 'v00', 0.677003, 3),
+        ('v01', 'v08', 0.766032, 1),
+        ('v01', 'v10', 0.747087, 2),
+        ('v03', 'v02', 0.787143, 2),
+        ('v03', 'v06', 0.787143, 3),
+        ('v03', 'v07', 0.8004, 1),
+    ],
+    ('pq_resid', 3): [
+        ('q_neg', 'v00', -0.74227, 1),
+        ('q_neg', 'v08', -0.746203, 2),
+        ('q_neg', 'v10', -0.788394, 3),
+        ('v01', 'v02', 0.701068, 3),
+        ('v01', 'v08', 0.766032, 1),
+        ('v01', 'v10', 0.747087, 2),
+        ('v03', 'v02', 0.787143, 2),
+        ('v03', 'v06', 0.787143, 3),
+        ('v03', 'v07', 0.8004, 1),
+    ],
+}
+
+
+@pytest.mark.parametrize("nprobe", _CHAR_NPROBES)
+@pytest.mark.parametrize(
+    "probe", ["ivf_topk", "indexed", "int8_rr0", "int8_rr4", "pq", "pq_resid"]
+)
+def test_ivf_probe_characterization(ivf_char, probe, nprobe):
+    out = _char_run(ivf_char, probe, nprobe)
+    rank = "rk" if probe == "ivf_topk" else "rank"
+    assert out.dtypes == [
+        ("q_id", "string"), ("n_id", "string"), ("cos", "double"), (rank, "int")
+    ]
+    assert sorted(tuple(r) for r in out.collect()) == _CHAR_GOLDEN[probe, nprobe]
+
+
+def test_ivf_probe_zero_vector_contract(ivf_char):
+    """The float probes drop a zero-norm candidate (0/0 is NaN); the int8
+    probe without rerank keeps it at cosine 0; the rerank drops it again."""
+    n = _CHAR_NPROBES[-1]
+
+    def zero_rows(probe):
+        rows = _char_run(ivf_char, probe, n).filter(F.col("n_id") == "v10")
+        return [(r.q_id, r.cos) for r in rows.collect()]
+
+    assert zero_rows("int8_rr0") == [("q_neg", 0.0)]
+    for probe in ("ivf_topk", "indexed", "int8_rr4"):
+        assert zero_rows(probe) == [], probe
+
+
+def test_ivf_topk_matches_indexed_at_partial_probe(ivf_char):
+    """Same centroids and nprobe=2: the transient and the indexed probe
+    return the same (q_id, n_id, rank) rows, and cos agrees to 6 dp."""
+    transient = _char_run(ivf_char, "ivf_topk", 2).select(
+        "q_id", "n_id", F.col("rk").alias("rank"), F.round("cos", 6).alias("cos")
+    )
+    indexed = _char_run(ivf_char, "indexed", 2).select("q_id", "n_id", "rank", "cos")
+    got = sorted(tuple(r) for r in transient.collect())
+    assert got and got == sorted(tuple(r) for r in indexed.collect())

@@ -1307,11 +1307,11 @@ def test_shared_shingles_size_gate(spark):
     consumer beats the checkpoint barrier at toy scale, measured), above
     it the fixed-width table is materialized once (one corpus scan at
     100 TB). Both regimes must produce the identical row set."""
-    from nexgap_spark.operators.dedup import plan_size_bytes, shared_shingles
-    from nexgap_spark.session import load_table
+    from nexgap_spark.operators.dedup import shared_shingles
+    from nexgap_spark.session import _plan_stats_bytes, load_table
 
     docs = load_table(spark, "/root/testdata/sf0.01", "documents")
-    est = plan_size_bytes(docs)
+    est = _plan_stats_bytes(docs)
     assert est > 0
 
     def is_mat(df):
