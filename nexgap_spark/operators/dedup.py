@@ -33,10 +33,18 @@ from nexgap_spark.session import (
 # (composing their frames into one plan would fail analysis).
 import itertools
 import logging
-import os
 
 _OBSERVE_SEQ = itertools.count(1)
 _LOG = logging.getLogger(__name__)
+
+# Input bytes above which shared_shingles materializes its shingle table
+# once instead of recomputing it per consumer (crossover measured between
+# 0.6 and 2.0 MB; see shared_shingles).
+SHINGLE_MAT_MIN_BYTES = 1024 * 1024
+# Exact edge count from which dup_groups reads its edge list from a
+# bucketed table (4M edges ≈ the 64 MB label-broadcast threshold at
+# 16 B/row; below it labels broadcast and the write is pure overhead).
+CC_BUCKET_MIN_EDGES = 4_000_000
 
 MINHASH_PRIME = 4_294_967_311
 MINHASH_PARAMS: tuple[tuple[int, int], ...] = (
@@ -209,7 +217,6 @@ def shared_shingles(
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_n: int = 3,
-    min_bytes: int | None = None,
     size_of: DataFrame | None = None,
 ) -> DataFrame:
     """Distinct shingle table for MULTI-CONSUMER lineages (signature path +
@@ -228,22 +235,16 @@ def shared_shingles(
     input, materialize LOSES ~20-25% on q31/q43/q118 (r17 box); ×3 ≈
     2.0 MB, materialize WINS 20-30% (r18 box, bench_r18 sweep); sf1.0 ≈
     6.6 MB, materialize WINS 30-40% (r17 box). The crossover therefore
-    sits between 0.6 and 2.0 MB; the default threshold is their geometric
-    midpoint ≈ 1 MB (r18 — the old 4 MB two-point default was ~2-4×
-    conservative), and any production corpus is far above it either way.
-    Override via ``NEXGAP_SHINGLE_MAT_MIN_BYTES`` (or ``min_bytes``).
+    sits between 0.6 and 2.0 MB; ``SHINGLE_MAT_MIN_BYTES`` is their
+    geometric midpoint ≈ 1 MB (r18 — the old 4 MB two-point default was
+    ~2-4× conservative), and any production corpus is far above it.
 
     ``size_of``: optional frame whose plan estimate stands in for ``df``'s
     when ``df`` is checkpoint-backed (RDD lineages report the conservative
     huge default) — callers pass the upstream scan the frame derives from,
     which errs toward the at-scale shape since derived rows ≤ input."""
-    if min_bytes is None:
-        import os
-
-        min_bytes = int(
-            os.environ.get("NEXGAP_SHINGLE_MAT_MIN_BYTES", str(1024 * 1024))
-        )
-    if _plan_stats_bytes(size_of if size_of is not None else df) < min_bytes:
+    est = _plan_stats_bytes(size_of if size_of is not None else df)
+    if est < SHINGLE_MAT_MIN_BYTES:
         return shingle_table(
             df, id_col=id_col, text_col=text_col, shingle_n=shingle_n
         )
@@ -635,9 +636,8 @@ def _bucketed_edge_store(edges: DataFrame):
     lives under the reliable checkpoint dir when one is configured, else
     the session temp root; one table per call, dropped by ``cleanup``.
 
-    Bucket count: NEXGAP_CC_EDGE_BUCKETS or defaultParallelism — the
-    cluster-wide core count is the natural reduce-side width for the loop
-    joins this table feeds."""
+    Bucket count: defaultParallelism — the cluster-wide core count is the
+    natural reduce-side width for the loop joins this table feeds."""
     import uuid
 
     from nexgap_spark.session import _local_mat_root
@@ -648,11 +648,9 @@ def _bucketed_edge_store(edges: DataFrame):
     ckdir = spark.sparkContext.getCheckpointDir()
     root = ckdir.rstrip("/") if ckdir else _local_mat_root()
     path = f"{root}/{name}"
-    buckets = int(
-        os.environ.get("NEXGAP_CC_EDGE_BUCKETS", "0")
-    ) or spark.sparkContext.defaultParallelism
     write_bucketed(
-        edges, name, path, bucket_cols=["m"], buckets=buckets, sort_cols=["m"]
+        edges, name, path, bucket_cols=["m"],
+        buckets=spark.sparkContext.defaultParallelism, sort_cols=["m"],
     )
 
     def cleanup() -> None:
@@ -701,8 +699,8 @@ def dup_groups(
     one join per round. Checkpoints route through session.materialize: by
     default localCheckpoint (executor block storage — fast, but lineage
     truncation makes the loop unrecoverable if an executor dies), and
-    automatically a RELIABLE `checkpoint()` whenever the context has a
-    checkpoint dir configured (`setCheckpointDir`), which makes the loop
+    automatically a parquet round-trip into the checkpoint dir whenever
+    the context has one configured (`setCheckpointDir`), which makes the loop
     survive executor loss — measured on the round-15 standalone-cluster
     harness (tools_cluster.py: kill -9 of an executor mid-round, hashes
     equal to the clean run).
@@ -755,13 +753,10 @@ def dup_groups(
     # one-time cost is a keyed write of the edge list (≈ one of the
     # per-round exchanges it removes). Size-gated on the exact edge count:
     # below the gate labels broadcast anyway and the write would be pure
-    # overhead — the default (4M edges ≈ the 64 MB label-broadcast
-    # threshold at 16 B/row) keeps every toy/local run on the old shape.
+    # overhead — CC_BUCKET_MIN_EDGES keeps every toy/local run on the old
+    # shape.
     edge_store_cleanup = None
-    min_bucket_edges = int(
-        os.environ.get("NEXGAP_CC_BUCKET_MIN_EDGES", str(4_000_000))
-    )
-    if n_edges >= min_bucket_edges:
+    if n_edges >= CC_BUCKET_MIN_EDGES:
         edges, edge_store_cleanup = _bucketed_edge_store(edges)
     try:
         # hash-min labels only ever DECREASE, so for INTEGER node ids the label

@@ -721,7 +721,7 @@ def q97_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # codec synth/decode below is CPU-bound per ROW: fan out to core
     # count past the file-split width (a x10 corpus written as 8 files
     # otherwise runs the whole Arrow stage 8-wide on 32 cores)
-    docs = fan_out_python_stage(t(spark, sf_dir, "documents").select("doc_id"), heavy=True)
+    docs = fan_out_python_stage(t(spark, sf_dir, "documents").select("doc_id"), cost="per_row")
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -793,7 +793,7 @@ def q101_png_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # codec synth/decode below is CPU-bound per ROW: fan out to core
     # count past the file-split width (a x10 corpus written as 8 files
     # otherwise runs the whole Arrow stage 8-wide on 32 cores)
-    docs = fan_out_python_stage(t(spark, sf_dir, "documents").select("doc_id"), heavy=True)
+    docs = fan_out_python_stage(t(spark, sf_dir, "documents").select("doc_id"), cost="per_row")
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -866,7 +866,7 @@ def q110_jpeg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # codec synth/decode below is CPU-bound per ROW: fan out to core
     # count past the file-split width (a x10 corpus written as 8 files
     # otherwise runs the whole Arrow stage 8-wide on 32 cores)
-    docs = fan_out_python_stage(t(spark, sf_dir, "documents").select("doc_id"), heavy=True)
+    docs = fan_out_python_stage(t(spark, sf_dir, "documents").select("doc_id"), cost="per_row")
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -1257,7 +1257,7 @@ def q111_progressive_jpeg_features(spark: SparkSession, sf_dir: str) -> DataFram
     # codec synth/decode below is CPU-bound per ROW: fan out to core
     # count past the file-split width (a x10 corpus written as 8 files
     # otherwise runs the whole Arrow stage 8-wide on 32 cores)
-    docs = fan_out_python_stage(t(spark, sf_dir, "documents").select("doc_id"), heavy=True)
+    docs = fan_out_python_stage(t(spark, sf_dir, "documents").select("doc_id"), cost="per_row")
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -1347,7 +1347,7 @@ def q112_mp4_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     # codec synth/decode below is CPU-bound per ROW: fan out to core
     # count past the file-split width (a x10 corpus written as 8 files
     # otherwise runs the whole Arrow stage 8-wide on 32 cores)
-    docs = fan_out_python_stage(t(spark, sf_dir, "documents").select("doc_id"), heavy=True)
+    docs = fan_out_python_stage(t(spark, sf_dir, "documents").select("doc_id"), cost="per_row")
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1443,7 +1443,7 @@ def q113_mjpeg_video_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # codec synth/decode below is CPU-bound per ROW: fan out to core
     # count past the file-split width (a x10 corpus written as 8 files
     # otherwise runs the whole Arrow stage 8-wide on 32 cores)
-    docs = fan_out_python_stage(t(spark, sf_dir, "documents").select("doc_id"), heavy=True)
+    docs = fan_out_python_stage(t(spark, sf_dir, "documents").select("doc_id"), cost="per_row")
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -1536,15 +1536,11 @@ def q113_mjpeg_video_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q119_gif_animation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nexgap_spark.operators.gif import decode_gif_frames, encode_gif
-    from nexgap_spark.session import FANOUT_CODEC_TARGET_BYTES
 
-    # codec-weight per-row stage (~ms/row over an id-only frame): the 8 KB
-    # per-task target hits the measured width sweet spot (session.py sweep:
-    # 16-wide 1.10 s vs 32-wide 1.69 s at 32 cores) and still clamps to
-    # core count on any at-scale frame
+    # codec-weight per-row stage (~ms/row over an id-only frame): see the
+    # "codec" class of session.FANOUT_BYTES_PER_TASK
     docs = fan_out_python_stage(
-        t(spark, sf_dir, "documents").select("doc_id"),
-        target_bytes=FANOUT_CODEC_TARGET_BYTES,
+        t(spark, sf_dir, "documents").select("doc_id"), cost="codec"
     )
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

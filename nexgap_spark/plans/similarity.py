@@ -300,9 +300,9 @@ def _plane_literal(plane: list[int]) -> str:
 
 # bits scale with N (VERDICT r9 item 5): 2^planes buckets should track
 # corpus size so per-bucket occupancy — and the quadratic per-bucket pair
-# work — stays constant across decades. The driver gate never sets the env
-# var, so the recorded oracle contract stays the base 8-plane one;
-# scale_bench's ANN family raises it with the multiplier (e.g. 8 + ~log2(m)).
+# work — stays constant across decades. Nothing in the repo sets the env
+# var, so the recorded oracle contract stays the base 8-plane one; the ×100
+# ANN scale run (SCALE.md) sets NEXGAP_Q45_PLANES=14 on its command line.
 import os as _os
 
 _Q45_PLANES = int(_os.environ.get("NEXGAP_Q45_PLANES", "8"))

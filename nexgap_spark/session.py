@@ -469,140 +469,74 @@ def _plan_stats_bytes(df: DataFrame) -> int:
         return 1 << 62
 
 
-# Bytes of input one CPU-bound stage task should own. Derivation (r18, the
-# r17 verdict's 8-vs-32-core finding: local[8] beat local[32] by 24% at
-# sf0.1 because every explicit repartition-to-defaultParallelism schedules
-# core-count tasks the data cannot amortize): the two measured regimes are
-# sf0.1 (0.6 MB documents — 8-wide wins) and sf1.0 (6.6 MB — 32-wide wins);
-# 64 KB/task maps them to widths 10 and ≥104 (capped at cores).  At
-# production scale any real corpus is ≫ cores × 64 KB, so the width is
-# always the core count and at-scale plans are unchanged — the knob only
-# right-sizes toy inputs.  Env-tunable, NOT cluster-tuned: the value encodes
-# per-byte CPU cost of the text/embedding kernels, not the deployment.
-FANOUT_TARGET_BYTES_DEFAULT = 64 * 1024
-# Mid-weight per-row stages (codec synthesis over id-only frames:
-# milliseconds per row, a few bytes per row) want a finer target than the
-# text/embedding kernels but NOT full core width. Measured on the q119
-# codec stage at 32 cores (width sweep, best-of-3 noop): width 32 → 1.69 s,
-# 16 → 1.10 s, 8 → 1.18 s, 2 → 2.12 s — 8 KB/task lands its 113 KB input
-# at width 15, the measured sweet spot; any at-scale id frame still clamps
-# to the core count. Call sites with this profile pass
-# ``target_bytes=FANOUT_CODEC_TARGET_BYTES``.
-FANOUT_CODEC_TARGET_BYTES = 8 * 1024
+# Bytes of input one task of a CPU-bound per-row stage should own, by the
+# stage's cost class. The width is the input's size estimate divided by this,
+# clamped to [2, defaultParallelism], so at scale (any input ≫ cores × target)
+# every class is the core count and only toy inputs are narrowed.
+#   "text"    — text/embedding kernels. Measured (r18): sf0.1's 0.6 MB corpus
+#               wins 8-wide, sf1.0's 6.6 MB wins 32-wide; 64 KB maps them to
+#               widths 10 and ≥ 104.
+#   "codec"   — codec synthesis over id-only frames (ms per row, a few bytes
+#               per row). q119's width sweep at 32 cores: 32 → 1.69 s,
+#               16 → 1.10 s, 8 → 1.18 s, 2 → 2.12 s; 8 KB lands its 113 KB
+#               input at 15.
+#   "per_row" — per-row cost orders above the row's bytes (subprocess forks,
+#               mock network transports): always the core count. Narrowing
+#               measurably loses (q96's transport: 0.72 → 0.89 s at width 14).
+FANOUT_BYTES_PER_TASK = {"text": 64 * 1024, "codec": 8 * 1024, "per_row": None}
 
 
-def adaptive_width(
-    df: DataFrame, *, floor: int = 2, target_bytes: int | None = None
-) -> int:
-    """Fan-out width for a CPU-bound per-row stage over ``df``: the input's
-    optimizer size estimate divided by the bytes/task target
-    (``target_bytes`` when given, else NEXGAP_FANOUT_TARGET_BYTES, default
-    64 KB/task), clamped to [floor, defaultParallelism].  Unknown sizes
-    (checkpoint-backed lineages) clamp to defaultParallelism — identical to
-    the pre-r18 behavior, so the adaptive path can only ever NARROW a
-    provably-small input, never under-parallelize an unknown one."""
+def adaptive_width(df: DataFrame, *, cost: str = "text") -> int:
+    """Fan-out width for a CPU-bound per-row stage over ``df``: its optimizer
+    size estimate divided by ``FANOUT_BYTES_PER_TASK[cost]``, clamped to
+    [2, defaultParallelism]. Unknown sizes (checkpoint-backed lineages)
+    clamp to defaultParallelism, so only a provably small input is ever
+    narrowed."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    target = target_bytes if target_bytes is not None else int(
-        os.environ.get("NEXGAP_FANOUT_TARGET_BYTES", str(FANOUT_TARGET_BYTES_DEFAULT))
-    )
-    if target <= 0:
+    target = FANOUT_BYTES_PER_TASK[cost]
+    if target is None:
         return par
     width = -(-_plan_stats_bytes(df) // target)
-    return int(max(min(par, width), min(par, floor)))
+    return int(max(min(par, width), min(par, 2)))
 
 
-def fan_out_python_stage(
-    df: DataFrame, *, heavy: bool = False, target_bytes: int | None = None
-) -> DataFrame:
-    """Fan a DataFrame out to cluster parallelism before a CPU-bound
-    per-row stage — a Python (mapInPandas / applyInPandas) stage, or a
-    JVM-side projection whose per-row cost dwarfs the scan (multi-pass
-    regex, shingle explode, stack() unpivot: the r13 sf1.0 sweep measured
-    q69's six regex passes at 6.3 s on 2 of 32 cores).
+def fan_out_python_stage(df: DataFrame, *, cost: str = "text") -> DataFrame:
+    """Fan ``df`` out to :func:`adaptive_width` partitions before a CPU-bound
+    per-row stage: a Python (mapInPandas / applyInPandas) stage, or a JVM
+    projection whose per-row cost dwarfs the scan (multi-pass regex,
+    shingle explode, stack() unpivot).
 
-    Such stage cost is per ROW, so the right partition count is core
-    count — but two mechanisms silently hand such stages fewer partitions:
-    small inputs scan as few file splits (a ×100 scaled corpus written as 8
-    files ran a 500 k-record Arrow stage 8-wide on 32 cores), and AQE's
-    byte-based coalescing (parallelismFirst=false above) shrinks any
-    upstream exchange whose compressed bytes look small. An explicit
-    numbered repartition carries the REPARTITION_BY_NUM shuffle origin,
-    which AQE never coalesces.
+    Two things hand such stages too few partitions: a small input scans as
+    few file splits, and AQE's byte-based coalescing (parallelismFirst=false)
+    shrinks an upstream exchange whose bytes look small. A numbered
+    repartition is exempt from that coalescing.
 
-    The partition probe is only run on exchange-free plans (scans +
-    narrow projections): the `df.rdd` probe is free there, but under AQE
-    it EXECUTES every upstream stage on a plan with exchanges. Inputs
-    whose lineage carries exchange-inducing nodes (post-shuffle frames,
-    e.g. operators/converter.py's) get the unconditional repartition —
-    since r17 the guard lives HERE (an analysis-only optimized-plan
-    probe), so any operator can call this instead of hand-writing
-    `repartition(par)`. The point of the conditional branch is the
-    at-scale exit: a corpus whose scan already yields ≥ core-count
-    splits must NOT pay a round-robin shuffle of its full payload just
-    to "parallelize" — that repartition is a local-mode aid (single-file
-    toy scans), not a plan constant (guide §2.3/§2.5: repartition(N)
-    also pays sortBeforeRepartition on every input row).
+    An input that is already at least ``width`` partitions wide is returned
+    unchanged, so an at-scale scan never pays a round-robin shuffle of its
+    payload. The partition probe (``df.rdd``) is free on an exchange-free
+    plan but runs the upstream stages of one with exchanges. Spark's
+    planner tells the two apart: with AQE on, it wraps the physical plan in
+    ``AdaptiveSparkPlan`` exactly when the plan needs an exchange or a
+    subquery. Those inputs are repartitioned without a probe, unless the
+    plan root is already a numbered repartition to at least ``width`` (read
+    off the logical node, no job). The rule leans on AQE, which
+    :func:`get_spark` turns on; with it off the probe would run those jobs.
 
-    Streaming DataFrames pass through untouched: `df.rdd` is illegal on a
-    stream, and micro-batch width is governed by the source's own options
-    (maxFilesPerTrigger × file splits), not the batch fan-out heuristic.
-
-    Width (r18): :func:`adaptive_width` — input bytes / 64 KB-per-task,
-    capped at defaultParallelism — instead of the raw core count. At scale
-    (unknown or ≫ cores × 64 KB inputs) the two are identical; on toy
-    inputs the adaptive width stops a 0.6 MB corpus from scheduling 32
-    micro-tasks per stage (the r17 verdict's 8-vs-32-core finding: the
-    whole sf0.1 suite was scheduling-overhead-bound and local[8] beat
-    local[32] by 24%).  ``heavy=True`` keeps the full core-count width for
-    stages whose PER-ROW cost is orders above their byte size (subprocess
-    forks, mock network transports over id-only frames) — bytes are the
-    wrong proxy exactly there, and narrowing them measurably loses (q96's
-    pipeline transport: 0.72 → 0.89 s at width 14). Mid-weight per-row
-    stages (codec synthesis) pass ``target_bytes`` instead — see
-    FANOUT_CODEC_TARGET_BYTES.
+    Streaming frames pass through: ``df.rdd`` is illegal on a stream, and
+    micro-batch width is set by the source's options.
     """
     if df.isStreaming:
         return df
-    par = df.sparkSession.sparkContext.defaultParallelism
-    width = par if heavy else adaptive_width(df, target_bytes=target_bytes)
-    root = df._jdf.queryExecution().optimizedPlan()
-    if any(tok in root.toString() for tok in _EXCHANGE_LINEAGE_NODES):
-        # exception inside the guard: a frame whose ROOT is an explicit
-        # round-robin repartition to >= width is already wide by
-        # construction — repartitioning again would double-shuffle the
-        # payload, and the width is on the logical node (no job needed)
-        try:
-            if root.nodeName() == "Repartition" and root.numPartitions() >= width:
-                return df
-        except Exception:  # noqa: BLE001 — width probe is best-effort
-            pass
+    width = adaptive_width(df, cost=cost)
+    qe = df._jdf.queryExecution()
+    if qe.executedPlan().nodeName() == "AdaptiveSparkPlan":
+        root = qe.optimizedPlan()
+        if root.nodeName() == "Repartition" and root.numPartitions() >= width:
+            return df
         return df.repartition(width)
     if df.rdd.getNumPartitions() < width:
         return df.repartition(width)
     return df
-
-
-# Logical nodes whose physical plan contains exchanges / broadcast stages
-# (so an eager `df.rdd` probe under AQE would run real jobs) — the
-# fan_out_python_stage guard. Deliberately conservative: a false positive
-# only costs the pre-r17 unconditional repartition.
-_EXCHANGE_LINEAGE_NODES = (
-    "Join",
-    "Aggregate",
-    "Window",
-    "Sort",
-    "Distinct",
-    "Deduplicate",
-    "Intersect",
-    "Except",
-    "RepartitionByExpression",
-    "Repartition",
-    "MapInPandas",
-    "FlatMapGroupsInPandas",
-    "FlatMapCoGroupsInPandas",
-    "MapPartitions",
-    "PythonUDF",
-)
 
 
 def wide_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -431,7 +431,7 @@ def test_dup_groups_bucketed_edge_store(spark, monkeypatch):
 
     baseline = groups(dup_groups(pairs))
     before_tables = {t.name for t in spark.catalog.listTables()}
-    monkeypatch.setenv("NEXGAP_CC_BUCKET_MIN_EDGES", "1")
+    monkeypatch.setattr(dedup, "CC_BUCKET_MIN_EDGES", 1)
     bucketed = groups(dup_groups(pairs))
     assert bucketed == baseline
     # the per-call edge table was dropped on the way out

@@ -1264,7 +1264,7 @@ def test_fan_out_skips_shuffle_on_wide_inputs(spark):
         ).alias("text"),
     )
     # cheap-lineage frames at both widths (LogicalRDD roots — no
-    # exchange tokens, so the conditional probe branch is exercised)
+    # exchange, so the conditional probe branch is exercised)
     wide = materialize(docs.repartition(par + 4))
     narrow = materialize(docs.coalesce(1))
     assert wide.rdd.getNumPartitions() >= par
@@ -1300,13 +1300,36 @@ def test_fan_out_skips_shuffle_on_wide_inputs(spark):
         + fo_agg._jdf.queryExecution().executedPlan().toString()
     )
 
+    # the guard asks the planner, not the plan text: a literal or a column
+    # name that spells an operator does not make a frame exchange-bearing
+    joined_text = wide.filter(F.col("text") != "Join")
+    assert fan_out_python_stage(joined_text) is joined_text
+    sorted_col = wide.withColumnRenamed("text", "Sorted")
+    assert fan_out_python_stage(sorted_col) is sorted_col
 
-def test_shared_shingles_size_gate(spark):
+    # ...and an exchange the plan text does not name (RebalancePartitions)
+    # still skips the partition probe: no Spark job runs inside the call
+    sc = spark.sparkContext
+    rebalanced = wide.hint("rebalance")
+    sc.setJobGroup("fan_out_guard_probe", "fan_out_python_stage guard")
+    try:
+        fo_rebalanced = fan_out_python_stage(rebalanced)
+        jobs = list(sc.statusTracker().getJobIdsForGroup("fan_out_guard_probe"))
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert jobs == []
+    assert fo_rebalanced.count() == 500
+
+
+def test_shared_shingles_size_gate(spark, monkeypatch):
     """r17: the multi-consumer shingle pass is size-gated — below the
     input-size threshold it stays a plain lazy distinct (recompute per
     consumer beats the checkpoint barrier at toy scale, measured), above
     it the fixed-width table is materialized once (one corpus scan at
     100 TB). Both regimes must produce the identical row set."""
+    from nexgap_spark.operators import dedup
     from nexgap_spark.operators.dedup import shared_shingles
     from nexgap_spark.session import _plan_stats_bytes, load_table
 
@@ -1319,8 +1342,10 @@ def test_shared_shingles_size_gate(spark):
         # being checkpoint-backed must not count, so no substring search)
         return df._jdf.queryExecution().optimizedPlan().nodeName() == "LogicalRDD"
 
-    lazy = shared_shingles(docs, min_bytes=est + 1)
-    mat = shared_shingles(docs, min_bytes=est)
+    monkeypatch.setattr(dedup, "SHINGLE_MAT_MIN_BYTES", est + 1)
+    lazy = shared_shingles(docs)
+    monkeypatch.setattr(dedup, "SHINGLE_MAT_MIN_BYTES", est)
+    mat = shared_shingles(docs)
     assert not is_mat(lazy)
     assert is_mat(mat)
     assert lazy.exceptAll(mat).isEmpty() and mat.exceptAll(lazy).isEmpty()
@@ -1331,8 +1356,10 @@ def test_shared_shingles_size_gate(spark):
     from nexgap_spark.session import materialize
 
     ckpt = materialize(docs)
-    assert not is_mat(shared_shingles(ckpt, min_bytes=est + 1, size_of=docs))
-    assert is_mat(shared_shingles(ckpt, min_bytes=est, size_of=docs))
+    monkeypatch.setattr(dedup, "SHINGLE_MAT_MIN_BYTES", est + 1)
+    assert not is_mat(shared_shingles(ckpt, size_of=docs))
+    monkeypatch.setattr(dedup, "SHINGLE_MAT_MIN_BYTES", est)
+    assert is_mat(shared_shingles(ckpt, size_of=docs))
 
 
 def test_dup_groups_single_round_clique_converges(spark):

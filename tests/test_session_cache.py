@@ -23,45 +23,40 @@ def test_wide_table_noop_when_already_wide(spark, tmp_path):
     assert out.count() == 10_000
 
 
-def test_adaptive_width_contracts(spark, monkeypatch):
+def test_adaptive_width_contracts(spark):
     """r18: CPU-stage fan-out width derives from the input's optimizer
-    size estimate (bytes / NEXGAP_FANOUT_TARGET_BYTES, default 64 KB),
-    clamped to [floor, defaultParallelism]. An unknown/huge estimate and
-    heavy=True both clamp to defaultParallelism (the pre-r18 behavior),
+    size estimate divided by its cost class's bytes per task
+    (FANOUT_BYTES_PER_TASK), clamped to [2, defaultParallelism]. The
+    "per_row" class is always defaultParallelism (the pre-r18 behavior),
     so the adaptive path can only narrow provably-small inputs."""
     from nexgap_spark.session import (
+        FANOUT_BYTES_PER_TASK,
         adaptive_width,
         fan_out_python_stage,
         load_table,
     )
 
+    assert set(FANOUT_BYTES_PER_TASK) == {"text", "codec", "per_row"}
     par = spark.sparkContext.defaultParallelism
     docs = load_table(spark, "/root/testdata/sf0.01", "documents")
     w = adaptive_width(docs)
+    assert w == adaptive_width(docs, cost="text")
     assert 2 <= w <= par
     # a tiny projection narrows further, but never below the floor
     assert 2 <= adaptive_width(docs.select("doc_id")) <= w
-    # env override: tiny target → width saturates at core count
-    monkeypatch.setenv("NEXGAP_FANOUT_TARGET_BYTES", "1")
-    assert adaptive_width(docs) == par
-    # target <= 0 disables the derivation entirely (always full width)
-    monkeypatch.setenv("NEXGAP_FANOUT_TARGET_BYTES", "0")
-    assert adaptive_width(docs) == par
-    monkeypatch.delenv("NEXGAP_FANOUT_TARGET_BYTES")
-    # heavy=True keeps the full core-count fan-out for per-row-bound
+    # "per_row" keeps the full core-count fan-out for per-row-bound
     # stages regardless of byte size
     narrow_ids = docs.select("doc_id").coalesce(1)
+    assert adaptive_width(narrow_ids, cost="per_row") == par
     assert (
-        fan_out_python_stage(narrow_ids, heavy=True).rdd.getNumPartitions()
+        fan_out_python_stage(narrow_ids, cost="per_row").rdd.getNumPartitions()
         == par
     )
-    # an explicit finer target (codec-weight stages) widens relative to
-    # the 64 KB default, still capped at core count
-    w_codec = adaptive_width(narrow_ids, target_bytes=8 * 1024)
-    assert adaptive_width(narrow_ids) <= w_codec <= par
+    # the finer "codec" target widens relative to "text", still capped at
+    # core count
+    w_codec = adaptive_width(narrow_ids, cost="codec")
+    assert adaptive_width(narrow_ids, cost="text") <= w_codec <= par
     assert (
-        fan_out_python_stage(
-            narrow_ids, target_bytes=8 * 1024
-        ).rdd.getNumPartitions()
+        fan_out_python_stage(narrow_ids, cost="codec").rdd.getNumPartitions()
         == w_codec
     )
